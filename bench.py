@@ -16,30 +16,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from commerce_data_pipeline_spark.measure import drop_persisted, warm_up
 from commerce_data_pipeline_spark.queries import REGISTRY
 from commerce_data_pipeline_spark.session import get_spark
 
-
-
-def _unpersist_all_rdds(spark) -> None:
-    """Drop every persisted RDD block, including localCheckpoint storage.
-
-    clearCache() only evicts SQL-cached relations; the iterative
-    operators (pagerank/LPA rounds, dedup CC, pHash bases) localCheckpoint
-    intermediate frames whose blocks otherwise accumulate across the
-    143-query suite — by the tail of the run the block manager is full
-    and collect-heavy queries measure memory churn, not their own cost
-    (part_communities: 3.5 s isolated vs 14-21 s late-suite before this).
-    """
-    try:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for jrdd in list(jmap.values()):
-            try:
-                jrdd.unpersist(False)
-            except Exception:
-                pass
-    except Exception:
-        pass
 
 def load_defense_history(repo_dir: str, sf_norm: str, k: int = 4) -> dict[str, float]:
     """Per-query MIN over the last-committed BENCH_FULL.json AND the last
@@ -111,17 +91,8 @@ def main() -> None:
     except Exception:
         pass  # connect-mode: noisier tail but harmless
 
-    # Warm the JVM paths once so per-query numbers measure the queries,
-    # not session bring-up: codegen compile, parquet reader init (footer +
-    # vectorized reader classes), shuffle machinery, python worker fork +
-    # numpy import (several seconds on first use otherwise billed to
-    # whichever query happens to run first).
+    warm_up(spark, sf_dir)
     from pyspark.sql import functions as F
-
-    spark.range(1000).selectExpr("sum(id)").collect()
-    warm = spark.read.parquet(os.path.join(sf_dir, "region.parquet"))
-    warm.join(warm.select(F.col("r_regionkey")), on="r_regionkey").groupBy("r_name").count().count()
-    spark.range(100).mapInPandas(lambda it: it, "id long").count()
 
     # Fixed-cost calibration probe (r9 VERDICT directive #2): one trivial
     # constant-work query — sf-independent, codegen + one 32-key shuffle —
@@ -189,8 +160,7 @@ def main() -> None:
             finally:
                 # drop persisted blocks (e.g. the LSH bucket index) so queries
                 # are timed independently, not under accumulated memory pressure
-                spark.catalog.clearCache()
-                _unpersist_all_rdds(spark)
+                drop_persisted(spark)
         if not failed and name in hist:
             first_min = best
             extra_here = 0
@@ -209,8 +179,7 @@ def main() -> None:
                 except Exception:
                     break
                 finally:
-                    spark.catalog.clearCache()
-                    _unpersist_all_rdds(spark)
+                    drop_persisted(spark)
                 defended.setdefault(name, [round(first_min, 3)]).append(
                     round(best, 3)
                 )

@@ -24,7 +24,7 @@ Scale notes (100 TB posture):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 from commerce_data_pipeline_spark.checkpoint import checkpoint as _checkpoint
 
 # Normalization shared by all text-keyed dedup: lowercase, collapse runs of

@@ -1388,15 +1388,16 @@ def kmeans_train(
     # seeds do, so probing first protected nothing — one driver
     # round-trip saved per training call). The guard still fires before
     # any corpus-sized work or stats collect.
-    # NULL seed vectors would otherwise surface as a bare TypeError from
-    # len(None) below (r18 ADVICE); the budget check itself still runs on
-    # the seed rows already in hand — the k seed vectors are the ONLY
-    # driver pull before the guard, bounded by k·dim of the caller's own
-    # seeds, and folding the dim probe into this collect saved a full
-    # driver round-trip per training call (r17)
-    if seeds and seeds[0]["_c"] is None:
+    # A NULL vector on ANY seed row would otherwise surface as a bare
+    # TypeError from len(None) or the codebook build below; the budget
+    # check itself still runs on the seed rows already in hand — the k
+    # seed vectors are the ONLY driver pull before the guard, bounded by
+    # k·dim of the caller's own seeds, and folding the dim probe into
+    # this collect saved a full driver round-trip per training call (r17)
+    null_ids = sorted(int(r["_cid"]) for r in seeds if r["_c"] is None)
+    if null_ids:
         raise ValueError(
-            f"kmeans_train: seed vector for id {seeds[0]['_cid']} is NULL — "
+            f"kmeans_train: seed vector for id {null_ids[0]} is NULL — "
             f"every seed row must carry a non-null `{vec_col}`"
         )
     if seeds and len(seeds[0]["_c"]) * k > max_codebook:

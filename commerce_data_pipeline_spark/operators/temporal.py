@@ -25,7 +25,7 @@ Implementations and their scale shape:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 
 def asof_join(

@@ -37,7 +37,6 @@ from commerce_data_pipeline_spark.queries import (  # noqa: F401
     graph_search,
     profiling_ml,
     selection_linkage,
-    _registry,
 )
 from commerce_data_pipeline_spark.queries._registry import (  # noqa: F401
     REGISTRY,
@@ -55,7 +54,7 @@ from commerce_data_pipeline_spark.queries.selection_linkage import _ensure_multi
 # from the UNSCALED 1x lineitem — silently invalidating every graph-family
 # stress row (the r6 stale-scale bug class, reintroduced by the r10 package
 # split and caught by the r10 advisor).
-_QUERY_MODULES = (_shared, relational, analytics, dedup_text, similarity, relational_wide, corpus, graph_search, profiling_ml, selection_linkage, _registry,)
+_QUERY_MODULES = (_shared, relational, analytics, dedup_text, similarity, relational_wide, corpus, graph_search, profiling_ml, selection_linkage)
 
 
 def rebind_load_table(fn) -> None:

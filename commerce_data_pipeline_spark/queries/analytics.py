@@ -6,39 +6,14 @@ contract every query follows.
 """
 from __future__ import annotations
 
-from collections.abc import Callable
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from commerce_data_pipeline_spark.catalog import load_table
-from commerce_data_pipeline_spark.operators import (
-    bloom,
-    corpus,
-    dedup,
-    graph,
-    layout as layout_ops,
-    linkage,
-    multimodal,
-    profiling,
-    search,
-    selection,
-    similarity,
-    sketches,
-    skew,
-    temporal,
-    text,
-)
 from commerce_data_pipeline_spark.operators.analytics import (
     attribution,
     funnel,
     position_attribution,
     sessionize,
-)
-from commerce_data_pipeline_spark.operators.analytics import (
-    association_rules as analytics_association_rules,
-    sequence_violations as analytics_sequence_violations,
-    session_funnel as analytics_session_funnel,
 )
 from commerce_data_pipeline_spark.streaming import events as streaming_events
 from commerce_data_pipeline_spark.queries._shared import _dsum

@@ -144,6 +144,21 @@ def test_registry_and_entrypoints_agree():
     assert set(oracle_sql()) <= set(REGISTRY)
 
 
+def test_registry_snapshot_unchanged():
+    """Every entry's name, implementation, oracle SQL and doc, in registry
+    order, hash to a pinned digest (201 entries, 197 with an oracle), so
+    any change to `queries()` or `oracle_sql()` must update it on purpose."""
+    import hashlib
+    import json
+
+    rows = [
+        [n, s.spark.__module__, s.spark.__qualname__, s.oracle, s.doc]
+        for n, s in REGISTRY.items()
+    ]
+    digest = hashlib.sha256(json.dumps(rows).encode()).hexdigest()
+    assert digest == "24fe9cf1469749b594a8077d1869261814f2c02f0aa037f985ed601daa3c8ec0"
+
+
 def test_rebind_load_table_reaches_every_consumer_module():
     """r10 ADVICE (medium): the stress harness scales tables by rebinding
     each query module's `load_table`; a queries submodule that calls

@@ -4,6 +4,7 @@ expression path equivalence, near-dup thresholds, ANN recall sanity."""
 import math
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from commerce_data_pipeline_spark.operators import similarity as S
@@ -1597,3 +1598,13 @@ def test_commit_refuses_when_copy_delete_fails(spark, tmp_path):
     res = I.recover_pending_swap(spark, path, "commit")
     assert res["state"] == "deferred_window" and res["swept"] == sorted(retired)
     assert not fs.exists(f"{path}/centroids._rebal_old")
+
+
+@pytest.mark.parametrize("null_id", [0, 2])
+def test_kmeans_train_names_null_seed(spark, null_id):
+    """A NULL vector on any seed row (not only seed id 0) raises a
+    ValueError naming that seed id, before any corpus-sized work."""
+    rows = [(i, None if i == null_id else [float(i), 1.0]) for i in range(4)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    with pytest.raises(ValueError, match=f"seed vector for id {null_id} is NULL"):
+        S.kmeans_train(emb, k=3, rounds=1)

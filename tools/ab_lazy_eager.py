@@ -30,6 +30,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from commerce_data_pipeline_spark import checkpoint as _ckpt_mod
+from commerce_data_pipeline_spark.measure import drop_persisted, warm_up
 from commerce_data_pipeline_spark.queries import REGISTRY
 from commerce_data_pipeline_spark.session import get_spark
 
@@ -88,17 +89,6 @@ def _install() -> None:
                 setattr(mod, attr, _patched)
 
 
-def _unpersist_all_rdds(spark) -> None:
-    try:
-        for jrdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
-            try:
-                jrdd.unpersist(False)
-            except Exception:
-                pass
-    except Exception:
-        pass
-
-
 def main() -> int:
     argv = list(sys.argv[1:])
     sf_dir = "/root/testdata/sf0.1"
@@ -154,14 +144,7 @@ def main() -> int:
     _install()
 
     spark = get_spark("ab-lazy-eager")
-    from pyspark.sql import functions as F
-
-    spark.range(1000).selectExpr("sum(id)").collect()
-    warm = spark.read.parquet(os.path.join(sf_dir, "region.parquet"))
-    warm.join(warm.select(F.col("r_regionkey")), on="r_regionkey").groupBy(
-        "r_name"
-    ).count().count()
-    spark.range(100).mapInPandas(lambda it: it, "id long").count()
+    warm_up(spark, sf_dir)
 
     for name in queries:
         spec = REGISTRY[name]
@@ -174,8 +157,7 @@ def main() -> int:
                     t0 = time.perf_counter()
                     spec.spark(spark, sf_dir).count()
                     best = min(best, time.perf_counter() - t0)
-                    spark.catalog.clearCache()
-                    _unpersist_all_rdds(spark)
+                    drop_persisted(spark)
                 res[variant].append(round(best, 3))
         _ACTIVE["on"] = False
         lb, eb = min(res["lazy"]), min(res["eager"])

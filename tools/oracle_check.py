@@ -20,6 +20,7 @@ import duckdb
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from commerce_data_pipeline_spark.catalog import TABLES
+from commerce_data_pipeline_spark.measure import drop_persisted
 from commerce_data_pipeline_spark.session import get_spark
 import __spark_entry__ as entrymod
 
@@ -94,15 +95,7 @@ def main() -> int:
             sdf = fn(spark, sf_dir)
             scols = sdf.columns
             srows = [tuple(r) for r in sdf.collect()]
-            # r6 hygiene: drop persisted blocks (incl. localCheckpoint
-            # storage) between queries — iterative operators' blocks
-            # otherwise accumulate across the 143-query sweep
-            spark.catalog.clearCache()
-            try:
-                for jrdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
-                    jrdd.unpersist(False)
-            except Exception:
-                pass
+            drop_persisted(spark)
         except Exception as e:
             print(f"FAIL {name}: spark error: {e}")
             results[name] = {"status": "fail", "err": f"spark: {e}"[:300]}

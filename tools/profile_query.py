@@ -4,6 +4,10 @@ For each named registry query: time to BUILD the DataFrame (py4j + analysis),
 then min-of-N full materializations (count(), matching bench.py), and the
 job/stage/task counts of one materialization via the status tracker — the
 fixed-overhead census that tells compute-bound from round-trip-bound.
+`build_s` and `min_s` are both minima over the N reps: the first rep also
+pays one-time work such as building a persisted index. Each invocation is
+a fresh session, so profiling one query gives its isolated min-of-N,
+free of the memory pressure and contention a suite run inherits.
 
     python tools/profile_query.py pca_power kmeans_train [--reps 3] \
         [--sf-dir /root/testdata/sf0.1]
@@ -22,19 +26,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from commerce_data_pipeline_spark.measure import drop_persisted, warm_up
 from commerce_data_pipeline_spark.queries import REGISTRY
 from commerce_data_pipeline_spark.session import get_spark
-
-
-def _unpersist_all_rdds(spark) -> None:
-    try:
-        for jrdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
-            try:
-                jrdd.unpersist(False)
-            except Exception:
-                pass
-    except Exception:
-        pass
 
 
 def main() -> int:
@@ -64,22 +58,14 @@ def main() -> int:
 
     spark = get_spark("profile-query")
     sc = spark.sparkContext
-    # same warm-up as bench.py so first-query numbers are comparable
-    from pyspark.sql import functions as F
-
-    spark.range(1000).selectExpr("sum(id)").collect()
-    warm = spark.read.parquet(os.path.join(sf_dir, "region.parquet"))
-    warm.join(warm.select(F.col("r_regionkey")), on="r_regionkey").groupBy(
-        "r_name"
-    ).count().count()
-    spark.range(100).mapInPandas(lambda it: it, "id long").count()
+    warm_up(spark, sf_dir)
 
     tracker = sc.statusTracker()
     for name in names:
         spec = REGISTRY[name]
         runs: list[float] = []
         counters = {"n_jobs": 0, "n_stages": 0, "n_tasks": 0}
-        build_s = None
+        builds: list[float] = []
         for r in range(reps):
             group = f"profile:{name}:{r}"
             sc.setJobGroup(group, name)
@@ -89,8 +75,7 @@ def main() -> int:
             df.count()
             t2 = time.perf_counter()
             sc.setJobGroup(None, None)
-            if build_s is None:
-                build_s = t1 - t0
+            builds.append(t1 - t0)
             # NB: the query function itself may run jobs (collects,
             # checkpoints) before count(); the whole group is the query.
             runs.append(t2 - t0)
@@ -109,13 +94,12 @@ def main() -> int:
                     if sinfo:
                         n_tasks += sinfo.numTasks
                 counters["n_tasks"] = n_tasks
-            spark.catalog.clearCache()
-            _unpersist_all_rdds(spark)
+            drop_persisted(spark)
         print(
             json.dumps(
                 {
                     "query": name,
-                    "build_s": round(build_s, 3),
+                    "build_s": round(min(builds), 3),
                     "min_s": round(min(runs), 3),
                     "runs": [round(x, 3) for x in runs],
                     **counters,

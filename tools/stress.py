@@ -1,7 +1,11 @@
 """Scale-stress harness: run headline queries at 1× and K× the sf0.1 data
 and report wall-time scaling factors → STRESS.md.
 
-    python tools/stress.py [K] [sf_dir]
+    python tools/stress.py [K] [sf_dir] [query ...]
+
+With no query list it sweeps STRESS_QUERIES plus the ledger row and
+rewrites STRESS.md's table; with a query list it sweeps only those
+registry queries and prints their table to stdout.
 
 The K× tables are built by unioning K key-shifted copies of the base
 tables (keys offset per copy so join fan-in and group cardinality grow
@@ -27,6 +31,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from commerce_data_pipeline_spark import queries as Q
 from commerce_data_pipeline_spark.catalog import load_table
+from commerce_data_pipeline_spark.measure import drop_persisted, warm_up
 from commerce_data_pipeline_spark.session import get_spark
 
 # keys shifted per copy so the scaled table has K× distinct entities
@@ -199,23 +204,6 @@ def _salt_copy(name: str, df: DataFrame, i: int) -> DataFrame:
     return df
 
 
-
-def unpersist_all_rdds(spark) -> None:
-    """Drop every persisted RDD block (incl. localCheckpoint storage) so
-    long multi-query runs don't accumulate block-manager pressure — the
-    r6 bench finding: iterative operators' checkpoint blocks piled up
-    across the suite and late queries measured memory churn (3.5 s
-    isolated vs 14-21 s late-suite) until this hygiene step."""
-    try:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for jrdd in list(jmap.values()):
-            try:
-                jrdd.unpersist(False)
-            except Exception:
-                pass
-    except Exception:
-        pass
-
 def scaled_loader(k: int):
     def load(spark, sf_dir, name):
         base = load_table(spark, sf_dir, name)
@@ -247,16 +235,8 @@ def _timed_min(fn, reps: int = REPS) -> float:
     return best
 
 
-def run_at_scale(
-    spark, sf_dir: str, k: int, names: list[str] | None = None,
-    warm: bool = False,
-) -> dict[str, float]:
-    """Min-of-REPS wall time per registry query at k× scale. `names`
-    defaults to STRESS_QUERIES; one-off sweeps (tools/stress_r*.py) pass
-    their own list so the rebind-loader / cache-tag / restore harness
-    lives in exactly one place (r14 review — stress_r14 had copied it).
-    `warm=True` runs one untimed pass per query first (JIT + any
-    _ensure_* cache build)."""
+def run_at_scale(spark, sf_dir: str, k: int, names: list[str]) -> dict[str, float]:
+    """Min-of-REPS wall time per registry query in `names` at k× scale."""
     # queries is now a package (r10 split): rebind load_table inside every
     # query module; the package-level Q.load_table stays the restore point.
     Q.rebind_load_table(scaled_loader(k))
@@ -267,15 +247,12 @@ def run_at_scale(
     Q.set_cache_tag(f"x{k}" if k != 1 else "")
     try:
         out: dict[str, float] = {}
-        for name in (STRESS_QUERIES if names is None else names):
+        for name in names:
 
             def run(name=name):
                 Q.REGISTRY[name].spark(spark, sf_dir).count()
-                spark.catalog.clearCache()
-                unpersist_all_rdds(spark)
+                drop_persisted(spark)
 
-            if warm:
-                run(name)
             out[name] = _timed_min(run)
         return out
     finally:
@@ -312,14 +289,16 @@ def ledger_match_time(spark, sf_dir: str, k: int) -> float:
 def main() -> None:
     k = int(sys.argv[1]) if len(sys.argv) > 1 else 8
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
+    names = sys.argv[3:] or STRESS_QUERIES
+    unknown = [n for n in names if n not in Q.REGISTRY]
+    if unknown:
+        sys.exit(f"unknown queries: {unknown}")
     spark = get_spark("stress")
-    spark.range(1000).selectExpr("sum(id)").collect()
+    warm_up(spark, sf_dir)
 
-    run_at_scale(spark, sf_dir, 1)  # untimed warm pass: codegen + readers
-    base = run_at_scale(spark, sf_dir, 1)
-    big = run_at_scale(spark, sf_dir, k)
-    led_base = ledger_match_time(spark, sf_dir, 1)
-    led_big = ledger_match_time(spark, sf_dir, k)
+    run_at_scale(spark, sf_dir, 1, names)  # untimed warm pass: codegen + readers
+    base = run_at_scale(spark, sf_dir, 1, names)
+    big = run_at_scale(spark, sf_dir, k, names)
 
     lines = [
         "# STRESS — wall-time scaling at K× data",
@@ -337,9 +316,14 @@ def main() -> None:
         "| query | 1× sec | {k}× sec | ratio |".replace("{k}", str(k)),
         "|---|---|---|---|",
     ]
-    for name in STRESS_QUERIES:
+    for name in names:
         r = big[name] / base[name] if base[name] > 0 else float("nan")
         lines.append(f"| {name} | {base[name]:.2f} | {big[name]:.2f} | {r:.1f}× |")
+    if sys.argv[3:]:
+        print("\n".join(lines))
+        return
+    led_base = ledger_match_time(spark, sf_dir, 1)
+    led_big = ledger_match_time(spark, sf_dir, k)
     led_r = led_big / led_base if led_base > 0 else float("nan")
     lines.append(
         f"| ledger_match_history (fixed batch, {k}× HISTORY) "
