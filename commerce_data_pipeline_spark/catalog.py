@@ -13,6 +13,7 @@ import os
 import warnings
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from commerce_data_pipeline_spark.schemas import EVENTS_RAW, TABLE_SCHEMAS
 
@@ -105,3 +106,30 @@ def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[st
     for name, df in dfs.items():
         df.createOrReplaceTempView(name)
     return dfs
+
+
+def local_frame(spark: SparkSession, rows, schema: str | StructType) -> DataFrame:
+    """A driver-built frame: `rows` (tuples in `schema` field order) under
+    `schema` (DDL string or StructType), planned as a `LocalRelation`.
+
+    `spark.createDataFrame(<python rows>)` plans a `LogicalRDD` that Python
+    workers re-serve on every execution, `defaultParallelism` tasks each
+    time, even for no rows. The same rows handed over as a pyarrow table
+    become a `LocalRelation`: it runs no task, Catalyst sizes it for a
+    broadcast, and a join against an empty one is folded away. Every
+    driver-built frame in the package goes through here
+    (tests/test_local_frame.py holds the guard)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct, timestamp_utc=False)
+    rows = list(rows)
+    width = len(struct.fields)
+    if any(len(r) != width for r in rows):
+        raise ValueError(f"every row needs {width} values for schema {struct.simpleString()}")
+    cols = list(zip(*rows)) if rows else [()] * width
+    table = pa.table(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, struct)

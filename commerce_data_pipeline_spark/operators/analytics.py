@@ -18,6 +18,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from commerce_data_pipeline_spark.catalog import local_frame
 from commerce_data_pipeline_spark.checkpoint import checkpoint as _checkpoint
 
 
@@ -365,7 +366,8 @@ def sequence_violations(
         .filter(F.col("_prev").isNotNull())
         .select(F.col("_prev").alias("prev_type"), F.col(type_col).alias("next_type"))
     )
-    allowed_df = df.sparkSession.createDataFrame(
+    allowed_df = local_frame(
+        df.sparkSession,
         list(allowed), "prev_type string, next_type string"
     )
     return (

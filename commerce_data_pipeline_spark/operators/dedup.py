@@ -25,6 +25,7 @@ Scale notes (100 TB posture):
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+from commerce_data_pipeline_spark.catalog import local_frame
 from commerce_data_pipeline_spark.checkpoint import checkpoint as _checkpoint
 
 # Normalization shared by all text-keyed dedup: lowercase, collapse runs of
@@ -429,7 +430,7 @@ def _driver_unionfind(edges: DataFrame) -> DataFrame:
                 parent[ra] = rb
     nodes = set(a_vals) | set(b_vals)
     labels = [(n, find(n)) for n in sorted(nodes)]
-    return edges.sparkSession.createDataFrame(labels, schema="id long, component long")
+    return local_frame(edges.sparkSession, labels, schema="id long, component long")
 
 
 def connected_components(

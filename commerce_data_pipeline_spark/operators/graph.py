@@ -38,6 +38,7 @@ Plan shape for 100 TB:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
+from commerce_data_pipeline_spark.catalog import local_frame
 from commerce_data_pipeline_spark.checkpoint import checkpoint as _checkpoint
 
 __all__ = ["pagerank", "co_occurrence_edges", "co_occurrence_pairs", "symmetrize_pairs", "label_propagation", "triangle_stats", "top_co_occurrences", "kcore", "neighbor_jaccard", "deterministic_walks"]
@@ -335,7 +336,7 @@ def _pagerank_iterate(
 
     n = len(nodes_arr)
     if n == 0:
-        return sp.createDataFrame([], schema="node bigint, rank bigint")
+        return local_frame(sp, [], schema="node bigint, rank bigint")
     ow = np.zeros(n, dtype="int64")
     np.add.at(ow, s_idx, w)
     rank = np.full(n, int(scale), dtype="int64")

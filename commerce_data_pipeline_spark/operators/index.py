@@ -35,6 +35,7 @@ from commerce_data_pipeline_spark.operators.similarity import (
     with_unit_vector,
 )
 from commerce_data_pipeline_spark.sources.hadoopfs import HadoopFS, join_path
+from commerce_data_pipeline_spark.catalog import local_frame
 from commerce_data_pipeline_spark.checkpoint import checkpoint as _checkpoint
 
 # Root-level witness that EVERY file under inverted/ carries the `gen`
@@ -255,7 +256,7 @@ def current_gen(spark: SparkSession, path: str) -> int:
 
 
 def _set_gen(spark: SparkSession, path: str, gen: int) -> None:
-    spark.createDataFrame([(int(gen),)], "gen int").coalesce(1).write.mode(
+    local_frame(spark, [(int(gen),)], "gen int").coalesce(1).write.mode(
         "overwrite"
     ).parquet(join_path(path, "gen_meta"))
 
@@ -273,7 +274,8 @@ def _set_centroid_meta(spark: SparkSession, path: str, base_n_centroids: int) ->
     around and no stale-counter window (r14 review — the first design
     wrote the current count post-swap, leaving a permanently stale
     sidecar if the driver died between the two)."""
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(int(base_n_centroids),)], "base_n_centroids int"
     ).coalesce(1).write.mode("overwrite").parquet(join_path(path, "centroid_meta"))
 
@@ -697,7 +699,7 @@ def rebalance_ivf_index(
     from commerce_data_pipeline_spark.sources.hadoopfs import begin_swap, swap_dir
 
     begin_swap(spark, cent_leaf, cent_tmp, cent_old, what="rebalance_ivf_index")
-    spark.createDataFrame(rows, new_table.schema).write.mode("overwrite").parquet(
+    local_frame(spark, rows, new_table.schema).write.mode("overwrite").parquet(
         cent_tmp
     )
     swap_dir(
@@ -1217,7 +1219,8 @@ def ivf_query(
         # every list compacted away (or nothing indexed yet): an empty
         # result with the probe-score schema, not a scan of nothing
         q_type = dict(queries.dtypes)[query_id_col]
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             f"query_id {q_type}, neighbor_id long, cosine_sim double, rank int",
         )

@@ -27,6 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql import types as T
+from commerce_data_pipeline_spark.catalog import local_frame
 from commerce_data_pipeline_spark.checkpoint import checkpoint as _checkpoint
 
 __all__ = ["table_profile", "group_outliers"]
@@ -322,7 +323,8 @@ def fd_violations_multi(
     # broadcast → SMJ stages), a per-FD sentinel union +0.6 s (breaks
     # the single whole-stage agg); the probe +0.05 s.
     if df.isEmpty():
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [
                 (label or f"{','.join(det)}->{dep}", 0, 0, None, None)
                 for det, dep, label in fds

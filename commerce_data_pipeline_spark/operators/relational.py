@@ -21,6 +21,7 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
+from commerce_data_pipeline_spark.catalog import local_frame
 from commerce_data_pipeline_spark.checkpoint import checkpoint as _checkpoint
 
 
@@ -186,7 +187,7 @@ def global_order_stats(
     off_schema = "_gr_pid int, _gr_offc long" + "".join(
         f", _gr_offs{i} long" for i in range(len(pairs))
     )
-    off_df = sp.createDataFrame(offsets, schema=off_schema)
+    off_df = local_frame(sp, offsets, schema=off_schema)
     from pyspark.sql import Window as W
 
     w = W.partitionBy("_gr_pid").orderBy(*cols)

@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from .text import words
+from commerce_data_pipeline_spark.catalog import local_frame
 from commerce_data_pipeline_spark.checkpoint import checkpoint as _checkpoint
 
 __all__ = ["bm25_topk", "bm25_scores", "tfidf_keywords", "hybrid_rrf", "build_text_index", "bm25_query_index"]
@@ -371,7 +372,8 @@ def bm25_query_index(
         raise ValueError("query_terms must be non-empty")
     postings = spark.read.parquet(join_path(path, "postings"))
     stats = spark.read.parquet(join_path(path, "stats"))
-    buckets = postings.sparkSession.createDataFrame(
+    buckets = local_frame(
+        postings.sparkSession,
         [(t,) for t in query_terms], "term string"
     ).select(_F.pmod(_F.xxhash64("term"), _F.lit(N_TERM_BUCKETS)).cast("int").alias("b"))
     bucket_vals = sorted({r["b"] for r in buckets.collect()})
@@ -436,7 +438,8 @@ def ndcg_at_k(
         raise ValueError("ndcg_at_k: need 1 <= k <= pool")
     spark = docs.sparkSession
     all_terms = sorted({t for _, terms in queries for t in terms})
-    qmap = spark.createDataFrame(
+    qmap = local_frame(
+        spark,
         [(qid, t) for qid, terms in queries for t in set(terms)],
         "query_id int, term string",
     )

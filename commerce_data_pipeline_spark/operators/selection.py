@@ -48,6 +48,7 @@ from .dedup import word_shingles
 from .relational import global_cumsum
 from .similarity import quantized_rel_frame
 from .text import words
+from commerce_data_pipeline_spark.catalog import local_frame
 from commerce_data_pipeline_spark.checkpoint import checkpoint as _checkpoint
 
 __all__ = [
@@ -331,7 +332,8 @@ def mmr_rerank(
             if best_sim[other] is None or s > best_sim[other]:
                 best_sim[other] = s
 
-    return emb.sparkSession.createDataFrame(
+    return local_frame(
+        emb.sparkSession,
         picked, schema=f"rank int, {id_col} long, rel_e6 long, max_sim_e6 long, mmr_score long"
     )
 

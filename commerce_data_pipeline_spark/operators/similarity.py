@@ -34,6 +34,7 @@ from math import floor as math_floor
 import pandas as pd
 
 from pyspark.sql import DataFrame, Window, functions as F
+from commerce_data_pipeline_spark.catalog import local_frame
 from commerce_data_pipeline_spark.checkpoint import checkpoint as _checkpoint
 
 
@@ -145,7 +146,8 @@ def brute_force_topk(
     spark = corpus.sparkSession
     q_rows = queries.select(F.col(query_id_col), F.col(vec_col)).collect()
     if not q_rows:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [], "query_id long, neighbor_id long, cosine_sim double, rank int"
         )
     bc = spark.sparkContext.broadcast(_normalized_matrix(q_rows))
@@ -318,7 +320,7 @@ def near_dup_pairs(
     else:
         all_rows = df.select(F.col(id_col), F.col(vec_col)).collect()
         if not all_rows:
-            return spark.createDataFrame([], "id_a long, id_b long, cosine_sim double")
+            return local_frame(spark, [], "id_a long, id_b long, cosine_sim double")
         bc = spark.sparkContext.broadcast(_normalized_matrix(all_rows))
 
         def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -866,7 +868,8 @@ def pq_topk(
         F.col(query_id_col), F.col("q_unit")
     ).collect()
     if not q_rows:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [], "query_id long, neighbor_id long, pq_sim double, rank int"
         )
     cb_rows = cb.collect()  # m·ksub rows — broadcast-size by construction
@@ -1543,7 +1546,8 @@ def pca_power_iteration(
         # identical-expression-tree doubles: floor((u/m)·1e6) in both engines
         v = [int(math_floor((x / m) * float(out_scale))) for x in u]
     spark = emb.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i, v[i]) for i in range(d)], "dim int, v_e6 long"
     )
 

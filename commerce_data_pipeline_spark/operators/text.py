@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from commerce_data_pipeline_spark.operators.dedup import fingerprint, normalized_text
+from commerce_data_pipeline_spark.catalog import local_frame
 from commerce_data_pipeline_spark.checkpoint import checkpoint as _checkpoint
 from commerce_data_pipeline_spark.scatter import scatter as _scatter
 
@@ -867,7 +868,8 @@ def bpe_train(
             apply_last=False,
         )
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         merges, "rnk int, left_sym string, right_sym string, pair_count long"
     )
 
@@ -1104,7 +1106,8 @@ def bpe_train_batched(
                 ).alias("syms"),
                 "cnt",
             ).transform(_checkpoint, eager=False)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out,
         "rnd int, pick int, left_sym string, right_sym string, pair_count long",
     )
@@ -1171,7 +1174,8 @@ def bpe_compression(
         for rnd, _l, _r, _c, vf in _bpe_loop(v0, rounds, apply_last=True):
             t = _total(vf)
             stages.append((rnd, t, base - t))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         stages, "stage int, total_syms long, saved_vs_chars long"
     )
 

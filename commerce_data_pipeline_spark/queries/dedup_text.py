@@ -420,8 +420,12 @@ def _q_sketch_accuracy(spark: SparkSession, sf: str) -> DataFrame:
     (reference README 'analytics'; SURVEY §2 X6)."""
     ev = load_table(spark, sf, "events")
     q = F.percentile_approx("value", [0.5], 10000)
-    agg = ev.agg(
-        F.countDistinct("user_id").alias("exact_users"),
+    # the exact distinct count is its own aggregate (distinct, then a
+    # count that skips NULL like countDistinct): inside one agg with the
+    # sketches, countDistinct plans an Expand that routes every HLL++ and
+    # GK update through a per-user aggregation
+    exact = ev.select("user_id").distinct().agg(F.count("user_id").alias("exact_users"))
+    sketches = ev.agg(
         F.approx_count_distinct("user_id", rsd=0.01).alias("_est_users"),
         F.element_at(q, 1).alias("_est_q50"),
         F.expr(
@@ -432,7 +436,7 @@ def _q_sketch_accuracy(spark: SparkSession, sf: str) -> DataFrame:
         ).alias("_q51"),
         F.count(F.lit(1)).alias("n_events"),
     )
-    return agg.select(
+    return exact.crossJoin(sketches).select(
         "exact_users",
         "n_events",
         (

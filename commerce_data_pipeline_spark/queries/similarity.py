@@ -8,7 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from commerce_data_pipeline_spark.catalog import load_table
+from commerce_data_pipeline_spark.catalog import load_table, local_frame
 from commerce_data_pipeline_spark.scatter import scatter as _scatter
 from commerce_data_pipeline_spark.operators import (
     corpus,
@@ -1255,7 +1255,8 @@ def _ensure_gated_ivf_index(spark: SparkSession, sf: str) -> str:
                 "gate lifecycle expects the deterministic skew to split — "
                 "a no-op pass means the fixture data changed shape"
             )
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(
                 int(out["pre"]["n_queries"]),
                 int(len(out["split_centroids"])),
@@ -1346,7 +1347,8 @@ def _ensure_veto_ivf_index(spark: SparkSession, sf: str) -> str:
                 not fs.exists(join_path(root, "centroids") + "._rebal_old")
                 and cur == base
             )
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [(
                     int(len(e.split)),
                     int(e.pre["mean_recall_e6"]),
@@ -1496,7 +1498,8 @@ def _ensure_selfheal_ivf_index(spark: SparkSession, sf: str) -> str:
         )
         leftover_after = _unroutable()
         healed = leftover_after == 0 and not further
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(
                 int(len(retired)),
                 int(leftover_before),
@@ -1745,7 +1748,8 @@ def _ensure_midswap_ivf_index(spark: SparkSession, sf: str) -> str:
             and cur == base
             and unroutable == 0
         )
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(
                 int(len(retired)),
                 int(len(res["swept"])),
@@ -1899,7 +1903,8 @@ def _ensure_recover_commit_ivf_index(spark: SparkSession, sf: str) -> str:
                 spark, root, max_list_size=10_000_000, n_splits=2
             ) == []
         )
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(
                 int(len(retired)),
                 int(len(res["swept"])),

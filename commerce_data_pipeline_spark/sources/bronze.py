@@ -40,6 +40,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from commerce_data_pipeline_spark.catalog import local_frame
 from commerce_data_pipeline_spark.sources.hadoopfs import HadoopFS, join_path
 
 logger = logging.getLogger(__name__)
@@ -218,13 +219,27 @@ class BronzePipeline:
             result.update(error="No data found")
             return result
         self.writer.write(day, self.date_col, self.sort_col)
-        n = self._count_partition(d)
+        n = self._count_landed([d], day).get(d, 0)
         self.writer.write_metadata(d, n, day.columns)
         result.update(success=True, records=n, skipped=False)
         return result
 
-    def _count_partition(self, d: date) -> int:
-        return self.spark.read.parquet(self.writer.partition_path(d)).count()
+    def _count_landed(self, days: list[date], written: DataFrame) -> dict[date, int]:
+        """Row count of every landed day in ONE grouped read of their
+        partition paths. The written frame's schema is declared, so no
+        footer-inference job runs; `basePath` keeps year/month/day as
+        columns."""
+        if not days:
+            return {}
+        rows = (
+            self.spark.read.schema(written.schema)
+            .option("basePath", self.writer.table_root)
+            .parquet(*(self.writer.partition_path(d) for d in days))
+            .groupBy("year", "month", "day")
+            .count()
+            .collect()
+        )
+        return {date(int(r["year"]), int(r["month"]), int(r["day"])): r["count"] for r in rows}
 
     def backfill(
         self,
@@ -235,8 +250,10 @@ class BronzePipeline:
     ) -> dict:
         """Date-range backfill. `set_based=True` (the scalable default) runs
         ONE job with a BETWEEN predicate and dynamic partition overwrite —
-        days land in parallel across executors. `set_based=False` preserves
-        the reference's per-day loop with per-day failure isolation
+        days land in parallel across executors — then counts every landed
+        day in one grouped read-back and writes each day's `_meta.json`
+        from it, as `run_daily` does. `set_based=False` preserves the
+        reference's per-day loop with per-day failure isolation
         (pipeline.py:174-200)."""
         start, end = _to_date(start), _to_date(end)
         if start > end:
@@ -264,13 +281,12 @@ class BronzePipeline:
                 iso = [d.isoformat() for d in todo]
                 df = df.filter(F.to_date(F.col(self.date_col)).cast("string").isin(iso))
                 self.writer.write(df, self.date_col, self.sort_col)
+                counts = self._count_landed([d for d in todo if self.writer.exists(d)], df)
                 for d in todo:
-                    n = (
-                        self._count_partition(d)
-                        if self.writer.exists(d)
-                        else 0
-                    )
+                    n = counts.get(d, 0)
                     ok = n > 0
+                    if ok:
+                        self.writer.write_metadata(d, n, df.columns)
                     summary["successful_days"] += int(ok)
                     summary["failed_days"] += int(not ok)
                     summary["total_records"] += n
@@ -305,20 +321,21 @@ class BronzePipeline:
         """P6 — gap detection: source dates with no bronze partition.
         Expressed as an anti-join against the sink's date list (tiny; the
         heavy side — source distinct — stays distributed)."""
-        sink = self.writer.list_available_dates(limit=10**6)
-        src = self.source_dates(days_back)
-        sink_df = self.spark.createDataFrame(
-            [(s,) for s in sink] or [(None,)], "d_str string"
-        ).filter(F.col("d_str").isNotNull()).select(F.to_date("d_str").alias("d"))
-        gaps = src.join(sink_df, on="d", how="left_anti").orderBy("d")
+        return self._gaps(self.writer.list_available_dates(limit=10**6), days_back)
+
+    def _gaps(self, sink: list[str], days_back: int | None) -> list[str]:
+        sink_df = local_frame(self.spark, [(date.fromisoformat(s),) for s in sink], "d date")
+        gaps = self.source_dates(days_back).join(sink_df, on="d", how="left_anti").orderBy("d")
         return [r["d"].isoformat() for r in gaps.collect()]
 
     def status(self, days_back: int | None = 30) -> dict:
         """`--status` parity (pipeline.py:234-256). `days_back=None` checks
-        the full history instead of the reference's 30-day window."""
-        missing = self.missing_dates(days_back)
+        the full history instead of the reference's 30-day window. The
+        sink is listed once; `sink_dates` is its newest `days_back or 100`."""
+        sink = self.writer.list_available_dates(limit=10**6)
+        missing = self._gaps(sink, days_back)
         return {
-            "sink_dates": self.writer.list_available_dates(limit=days_back or 100),
+            "sink_dates": sink[: days_back or 100],
             "missing_dates": missing,
             "is_healthy": not missing,
         }

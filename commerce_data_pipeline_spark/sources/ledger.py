@@ -7,13 +7,15 @@ state. The ledger is that state, kept deliberately minimal: one column of
 md5 content fingerprints, partitioned by a fingerprint prefix.
 
 Scale posture (100 TB corpus, billions of fingerprints):
-- The ledger stores ONLY digests (32-char md5) — never text. The
-  anti-join against it shuffles (fp, id) pairs at most; with both sides
-  hash-distributed on fp the join is the cheapest possible shape, and
-  the prefix partitioning keeps per-run appends small and prunable.
-- `filter_new` also collapses duplicates WITHIN the incoming batch
-  (min-id per fingerprint) before touching the ledger, so intra-batch
-  dup fan-in never reaches the join.
+- The ledger stores ONLY digests (32-char md5) — never text, and the
+  prefix partitioning keeps per-run appends small and prunable.
+- `filter_new` reads its batch ONCE: one hash-partitioning of the batch
+  rows on fp serves both the intra-batch collapse (keep the row whose
+  id is the fingerprint's min id, a window over fp) and the anti-join
+  against the ledger, which is then either a broadcast of the ledger's
+  digests or a sort-merge join reusing that same partitioning — one
+  full-row shuffle per lookup at any size. Intra-batch dup fan-in never
+  reaches the join, and an empty ledger plans no join at all.
 - `commit` appends only the fingerprints actually admitted, so the
   ledger is exactly the set of content ever accepted — idempotent
   re-ingestion of the same batch admits nothing.
@@ -25,8 +27,9 @@ partition granularity to content granularity.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from commerce_data_pipeline_spark.catalog import local_frame
 from commerce_data_pipeline_spark.operators.dedup import fingerprint, minhash_band_rows
 from commerce_data_pipeline_spark.sources.hadoopfs import HadoopFS
 from commerce_data_pipeline_spark.checkpoint import checkpoint as _checkpoint
@@ -61,10 +64,12 @@ class FingerprintLedger:
         return HadoopFS(self.spark, self.path).exists(self.path)
 
     def known(self) -> DataFrame:
-        """The fingerprint set admitted so far (empty frame if no ledger)."""
+        """The fingerprint set admitted so far (empty frame if no ledger).
+        The digest column is declared, so reading it runs no
+        footer-inference job."""
         if not self.exists():
-            return self.spark.createDataFrame([], "fp string")
-        return self.spark.read.parquet(self.path).select("fp")
+            return local_frame(self.spark, [], "fp string")
+        return self.spark.read.schema("fp string").parquet(self.path).select("fp")
 
     def with_fingerprint(self, df: DataFrame, text_col: str = "text") -> DataFrame:
         return df.withColumn("fp", fingerprint(text_col))
@@ -73,16 +78,18 @@ class FingerprintLedger:
         self, df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     ) -> DataFrame:
         """Rows whose content has never been admitted: intra-batch
-        collapse (min id per fingerprint, digest-only shuffle) then an
-        anti-join against the ledger on fp. Returns the original columns
-        plus `fp` (callers pass the result straight to `commit`)."""
-        fped = self.with_fingerprint(df, text_col)
-        keep = (
-            fped.select("fp", F.col(id_col))
-            .groupBy("fp")
-            .agg(F.min(id_col).alias(id_col))
+        collapse (the rows holding their fingerprint's min id; NULL text
+        has no fingerprint and is never admitted) then an anti-join
+        against the ledger on fp. Returns the original columns plus `fp`
+        (callers pass the result straight to `commit`)."""
+        batch_unique = (
+            # fp is NULL exactly when the text is; testing the text keeps
+            # Catalyst from computing the digest twice per row
+            self.with_fingerprint(df.filter(F.col(text_col).isNotNull()), text_col)
+            .withColumn("_min_id", F.min(id_col).over(Window.partitionBy("fp")))
+            .filter(F.col(id_col) == F.col("_min_id"))
+            .drop("_min_id")
         )
-        batch_unique = fped.join(keep, on=["fp", id_col], how="left_semi")
         return batch_unique.join(self.known(), on="fp", how="left_anti")
 
     def commit(self, admitted: DataFrame) -> None:
@@ -125,8 +132,7 @@ class FingerprintLedger:
 
         def _write(tmp: str) -> None:
             (
-                spark.read.parquet(self.path)
-                .select("fp")
+                self.known()
                 .dropDuplicates(["fp"])
                 .withColumn("fp_prefix", F.substring("fp", 1, prefix_chars))
                 # (prefix, salt) keying: one prefix CAN split across
@@ -180,7 +186,7 @@ class BandLedger:
 
     def known(self) -> DataFrame:
         if not self.exists():
-            return self.spark.createDataFrame([], "band int, bkey string, doc_id long")
+            return local_frame(self.spark, [], "band int, bkey string, doc_id long")
         return self.spark.read.parquet(self.path).select("band", "bkey", "doc_id")
 
     def band_rows(self, df: DataFrame, id_col: str = "doc_id",
@@ -377,8 +383,8 @@ class QualityGateLedger:
         empty-state precedent). Raises ValueError if the stored bin
         config differs from this handle's."""
         if not self.exists():
-            return self.spark.createDataFrame(
-                [], "bin int, n long, n_pos long, sum_conf decimal(38,0)"
+            return local_frame(
+                self.spark, [], "bin int, n long, n_pos long, sum_conf decimal(38,0)"
             )
         raw = self.spark.read.parquet(self.path)
         configs = [

@@ -104,6 +104,36 @@ def test_list_available_and_missing_dates(spark, tmp_path):
     assert status["is_healthy"] is False
 
 
+def test_status_lists_newest_sink_dates(spark, tmp_path):
+    p = _pipeline(spark, tmp_path)
+    p.run_daily("2024-01-01")
+    p.run_daily("2024-01-02")
+    full = p.status(days_back=None)
+    assert full == {
+        "sink_dates": ["2024-01-02", "2024-01-01"],
+        "missing_dates": ["2024-01-04"],
+        "is_healthy": False,
+    }
+    # the 2024 source holds no date within the last day; one sink date shown
+    assert p.status(days_back=1) == {
+        "sink_dates": ["2024-01-02"],
+        "missing_dates": [],
+        "is_healthy": True,
+    }
+
+
+def test_set_based_backfill_writes_sidecars_like_loop_mode(spark, tmp_path):
+    set_based = _pipeline(spark, tmp_path / "set")
+    loop = _pipeline(spark, tmp_path / "loop")
+    set_based.backfill("2024-01-01", "2024-01-04", set_based=True)
+    loop.backfill("2024-01-01", "2024-01-04", set_based=False)
+    for d in ("2024-01-01", "2024-01-02", "2024-01-04"):
+        got, want = set_based.writer.read_metadata(d), loop.writer.read_metadata(d)
+        assert got is not None and want is not None, d
+        assert (got["record_count"], got["columns"]) == (want["record_count"], want["columns"]), d
+    assert set_based.writer.read_metadata("2024-01-03") is None
+
+
 def test_metadata_sidecar(spark, tmp_path):
     import json
     import os

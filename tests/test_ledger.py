@@ -30,6 +30,26 @@ def test_second_batch_admits_only_unseen(spark, tmp_path):
     assert led.known().count() == 3
 
 
+def test_filter_new_admits_min_id_rows_of_unseen_content(spark, tmp_path):
+    import hashlib
+
+    def fp(text):
+        return hashlib.md5(" ".join(text.lower().split()).encode()).hexdigest()
+
+    led = FingerprintLedger(spark, str(tmp_path / "ledger"))
+    led.ingest(_docs(spark, [(0, "known text")]))
+    batch = _docs(spark, [
+        (5, None),             # NULL text: no fingerprint, never admitted
+        (1, "alpha"),          # two rows with the same (fp, doc_id):
+        (1, "ALPHA"),          # both hold the fingerprint's min id
+        (3, " alpha  "),       # in-batch duplicate at a higher id
+        (2, "Known   TEXT"),   # content already in the ledger
+        (4, "gamma"),
+    ])
+    got = sorted((r["doc_id"], r["fp"]) for r in led.filter_new(batch).collect())
+    assert got == [(1, fp("alpha")), (1, fp("alpha")), (4, fp("gamma"))]
+
+
 def test_reingest_is_idempotent(spark, tmp_path):
     led = FingerprintLedger(spark, str(tmp_path / "ledger"))
     batch = _docs(spark, [(0, "alpha"), (1, "beta")])

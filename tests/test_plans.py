@@ -464,3 +464,54 @@ def test_bpe_train_batched_round_is_one_vocab_pass(spark):
     # fused emit appears once per batch, not once per pair
     plan = applied._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("flatten(transform(sequence(1, size(") <= 1
+
+
+def _batch_scans(df, batch_path) -> int:
+    import re
+
+    return sum(
+        batch_path in loc
+        for loc in re.findall(r"Location: \w+ \[(.*?)\]", plans.formatted_plan(df))
+    )
+
+
+def test_ledger_filter_new_one_batch_scan_one_shuffle(spark, tmp_path):
+    """`filter_new` reads its batch once and shuffles it once: the min-id
+    window over fp and the anti-join against the ledger share one
+    hash-partitioning. Over an empty ledger there is no join at all."""
+    from commerce_data_pipeline_spark.sources.ledger import FingerprintLedger
+
+    batch_path = str(tmp_path / "batch.parquet")
+    spark.createDataFrame(
+        [(i, f"document {i % 5}") for i in range(20)], "doc_id long, text string"
+    ).write.parquet(batch_path)
+    batch = spark.read.parquet(batch_path)
+
+    empty = FingerprintLedger(spark, str(tmp_path / "empty"))
+    first = empty.filter_new(batch)
+    assert _batch_scans(first, batch_path) == 1
+    assert "Join" not in plans.formatted_plan(first)
+    assert plans.num_shuffles(first) == 1
+
+    led = FingerprintLedger(spark, str(tmp_path / "ledger"))
+    led.ingest(spark.createDataFrame([(0, "document 0")], "doc_id long, text string"))
+    lookup = led.filter_new(batch)
+    assert _batch_scans(lookup, batch_path) == 1
+    assert plans.num_shuffles(lookup) == 1
+    assert sorted(r["doc_id"] for r in lookup.collect()) == [1, 2, 3, 4]
+
+
+def test_sketch_accuracy_sketches_skip_the_per_user_aggregate(spark):
+    """The exact distinct count is its own aggregate. Planned inside one
+    agg with the sketches, countDistinct keys a partial aggregation by
+    user_id that carries every HLL++ and GK buffer; no aggregate keyed by
+    user_id may hold a sketch, and no Expand may appear."""
+    import re
+
+    df = REGISTRY["sketch_accuracy"].spark(spark, SF)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Expand" not in plan
+    per_user = re.findall(r"Aggregate\(keys=\[user_id#\d+L\], functions=\[(.*?)\], output", plan)
+    assert per_user, plan
+    assert not any("approx" in f or "percentile" in f for f in per_user), per_user
