@@ -12,7 +12,11 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from commerce_data_pipeline_spark.operators.dedup import fingerprint, normalized_text
+from commerce_data_pipeline_spark.operators.dedup import (
+    fingerprint,
+    normalized_text,
+    word_ngrams,
+)
 from commerce_data_pipeline_spark.catalog import local_frame
 from commerce_data_pipeline_spark.checkpoint import checkpoint as _checkpoint
 from commerce_data_pipeline_spark.scatter import scatter as _scatter
@@ -119,8 +123,10 @@ def repetition_profile(
     filters for training corpora):
 
     - `rep_ratio_e6`  : 1 − distinct n-grams / total n-grams — high for
-      boilerplate/degenerate text (computed scan-side with HOFs, no
-      explode for this part).
+      boilerplate/degenerate text (computed scan-side, no explode for
+      this part). The n-grams come from `dedup.word_ngrams`, one linear
+      `zip_with` fold: a per-gram lambda here would re-normalize and
+      re-split the whole document once per gram.
     - `top_word_e6`   : most-frequent-token fraction — high for spammy
       keyword-stuffed text. This one needs a per-(doc, word) count, so it
       is the one shuffle here: explode → two stacked group-bys keyed by
@@ -130,12 +136,7 @@ def repetition_profile(
     """
     ws = words(text_col)
     total_n = F.greatest(F.size(ws) - (n - 1), F.lit(0))
-    idx = F.when(F.size(ws) >= n, F.sequence(F.lit(0), F.size(ws) - n)).otherwise(
-        F.array().cast("array<int>")
-    )
-    all_grams = F.transform(
-        idx, lambda i: F.concat_ws(" ", F.slice(ws, i + F.lit(1), F.lit(n)))
-    )
+    all_grams = word_ngrams(text_col, n)
     distinct_n = F.size(F.array_distinct(all_grams))
     rep = F.when(
         total_n > 0,

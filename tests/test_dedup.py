@@ -1,6 +1,10 @@
 """Unit tests for dedup operators (SURVEY.md §2d X1/X2)."""
 
 import hashlib
+import re
+
+import pytest
+from pyspark.sql import functions as F
 
 from commerce_data_pipeline_spark.operators import dedup as D
 
@@ -34,6 +38,21 @@ def test_word_shingles(spark):
     out = df.select(D.word_shingles("text", 3).alias("s")).collect()
     assert sorted(out[0]["s"]) == ["a b c", "b c d"]
     assert out[1]["s"] == []  # shorter than n → empty
+
+
+def test_word_ngrams_keep_order_and_repeats(spark):
+    df = _docs(spark, ["a b a b a b", "a", None, "x  Y z w"])
+    out = df.select(
+        D.word_ngrams("text", 2).alias("g"),
+        D.word_ngrams("text", 3).alias("g3"),
+        D.word_shingles("text", 2).alias("s"),
+        F.array_distinct(D.word_ngrams("text", 2)).alias("ds"),
+    ).collect()
+    assert out[0]["g"] == ["a b", "b a", "a b", "b a", "a b"]
+    assert out[1]["g"] == []  # fewer than n words
+    assert out[2]["g"] == [] and out[2]["g3"] == []  # NULL text
+    assert out[3]["g3"] == ["x y z", "y z w"]
+    assert all(r["s"] == r["ds"] for r in out)
 
 
 def test_minhash_identical_docs_equal_signatures(spark):
@@ -85,6 +104,64 @@ def test_simhash_properties(spark):
     sims = {r["doc_id"]: r["simhash"] for r in D.simhash(df).collect()}
     assert sims[0] == sims[1]
     assert sims[0] != sims[2]
+
+
+@pytest.mark.parametrize("bits", [0, 65])
+def test_simhash_rejects_out_of_range_bits(spark, bits):
+    df = _docs(spark, ["alpha beta gamma"])
+    with pytest.raises(ValueError, match="bits"):
+        D.simhash(df, bits=bits)
+
+
+_SIMHASH_TEXTS = [
+    "alpha beta gamma",
+    "the quick brown fox jumps over the lazy dog today",
+    "Repeated repeated REPEATED words   words",
+    "",
+    None,
+    "one",
+]
+
+
+def _words(text):
+    """Normalized words; NULL text is one empty word, as in the operator."""
+    return re.sub(r"\s+", " ", (text or "").lower()).strip(" ").split(" ")
+
+
+def _simhash_reference(text, word_hash, bits):
+    """Pure-Python SimHash: vote per bit over every word (repeats count),
+    set the bit on a positive vote, read the result as a signed long."""
+    hashes = [word_hash(w) for w in _words(text)]
+    packed = sum(
+        1 << b for b in range(bits) if sum(((h >> b) & 1) * 2 - 1 for h in hashes) > 0
+    )
+    return packed - (1 << 64) if packed >= 1 << 63 else packed
+
+
+def test_simhash_md5_exact_values(spark):
+    df = _docs(spark, _SIMHASH_TEXTS)
+
+    def md5_prefix(w):
+        return int(hashlib.md5(w.encode()).hexdigest()[:15], 16)
+
+    got = {r["doc_id"]: r["simhash"] for r in D.simhash_md5(df, bits=60).collect()}
+    want = {i: _simhash_reference(t, md5_prefix, 60) for i, t in enumerate(_SIMHASH_TEXTS)}
+    assert got == want
+
+
+def test_simhash_exact_values_with_sign_bit(spark):
+    df = _docs(spark, _SIMHASH_TEXTS)
+    vocab = sorted({w for t in _SIMHASH_TEXTS for w in _words(t)})
+    hashes = {
+        r["w"]: r["h"]
+        for r in spark.createDataFrame([(w,) for w in vocab], "w string")
+        .select("w", F.xxhash64("w").alias("h"))
+        .collect()
+    }
+    got = {r["doc_id"]: r["simhash"] for r in D.simhash(df, bits=64).collect()}
+    want = {i: _simhash_reference(t, hashes.__getitem__, 64) for i, t in enumerate(_SIMHASH_TEXTS)}
+    assert got == want
+    assert any(v < 0 for v in want.values())  # bit 63 (the sign bit) is exercised
 
 
 def test_simhash_buckets_near_dup(spark):

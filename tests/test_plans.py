@@ -515,3 +515,28 @@ def test_sketch_accuracy_sketches_skip_the_per_user_aggregate(spark):
     per_user = re.findall(r"Aggregate\(keys=\[user_id#\d+L\], functions=\[(.*?)\], output", plan)
     assert per_user, plan
     assert not any("approx" in f or "percentile" in f for f in per_user), per_user
+
+
+def _lambda_bodies(plan: str) -> list[str]:
+    import re
+
+    bodies = []
+    for start in (m.end() for m in re.finditer(r"lambdafunction\(", plan)):
+        depth, i = 1, start
+        while depth:
+            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            i += 1
+        bodies.append(plan[start:i - 1])
+    return bodies
+
+
+def test_repetition_profile_grams_skip_per_gram_normalize(spark):
+    """The n-grams are one linear `zip_with` fold over the word array: no
+    HOF lambda body re-runs the normalize regex, which a per-gram slice of
+    the word array did once per gram (O(words²) regex work per document)."""
+    from commerce_data_pipeline_spark.operators.text import repetition_profile
+
+    df = repetition_profile(load_table(spark, SF, "documents"))
+    bodies = _lambda_bodies(df._jdf.queryExecution().optimizedPlan().toString())
+    assert bodies
+    assert not [b for b in bodies if "regexp_replace" in b], bodies

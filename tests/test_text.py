@@ -86,6 +86,21 @@ def test_repetition_profile_degenerate_vs_diverse(spark):
     assert rows[2]["top_word_e6"] == 1_000_000
 
 
+def test_repetition_profile_null_and_short_docs(spark):
+    df = _docs(spark, [None, "Hello  world", "a b a b a b"])
+    rows = {
+        r["doc_id"]: (r["n_words"], r["n_grams_total"], r["n_grams_distinct"],
+                      r["rep_ratio_e6"], r["top_word_e6"])
+        for r in X.repetition_profile(df).collect()
+    }
+    assert rows[0] == (None, 0, 0, 0, 0)
+    assert rows[1] == (2, 0, 0, 0, 500_000)
+    # 3-grams: a b a, b a b, a b a, b a b -> 2 distinct of 4
+    assert rows[2] == (6, 4, 2, 500_000, 500_000)
+    bigrams = X.repetition_profile(df, n=2).collect()
+    assert {r["doc_id"]: r["n_grams_distinct"] for r in bigrams} == {0: 0, 1: 1, 2: 2}
+
+
 def test_unigram_typicality_exact_values(spark):
     df = _docs(spark, [
         "the cat sat",          # 0: all common-ish words
