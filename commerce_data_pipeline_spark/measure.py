@@ -42,3 +42,15 @@ def drop_persisted(spark: SparkSession) -> None:
                 pass
     except Exception:
         pass
+
+
+def codegen_compiles(spark: SparkSession) -> tuple[int, float]:
+    """Classes the driver JVM has compiled from generated code so far, and
+    the seconds spent compiling them (both cumulative since JVM start).
+    Take the difference around a run: a warm run of a query whose
+    generated code is deterministic compiles nothing, because its classes
+    are served from the codegen cache."""
+    jvm = spark.sparkContext._jvm
+    count = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    nanos = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return int(count), nanos / 1e9

@@ -360,15 +360,16 @@ def _q_approx_stats(spark: SparkSession, sf: str) -> DataFrame:
     documented tolerance (HLL rsd=0.01 → ±5%; percentile_approx
     accuracy=10000 → rank error ≤ n/1e4, widened to the p±0.02 exact
     discrete bounds, which a drifting sketch would escape). Covers the
-    three-quantile tail (q50/q95/q99) where `sketch_accuracy` pins q50."""
+    three-quantile tail (q50/q95/q99) where `sketch_accuracy` pins q50.
+    The exact distinct count is its own aggregate, as in `sketch_accuracy`."""
     ev = load_table(spark, sf, "events")
     q = F.percentile_approx("value", [0.5, 0.95, 0.99], 10000)
 
     def disc(p: float) -> F.Column:
         return F.expr(f"percentile_disc({p}) WITHIN GROUP (ORDER BY value)")
 
-    agg = ev.agg(
-        F.countDistinct("user_id").alias("exact_users"),
+    exact = ev.select("user_id").distinct().agg(F.count("user_id").alias("exact_users"))
+    sketches = ev.agg(
         F.approx_count_distinct("user_id", rsd=0.01).alias("_est_users"),
         F.element_at(q, 1).alias("_q50"),
         F.element_at(q, 2).alias("_q95"),
@@ -378,7 +379,7 @@ def _q_approx_stats(spark: SparkSession, sf: str) -> DataFrame:
         disc(0.98).alias("_b98"), disc(1.00).alias("_b100"),
         F.count(F.lit(1)).alias("n_events"),
     )
-    return agg.select(
+    return exact.crossJoin(sketches).select(
         "exact_users",
         "n_events",
         (

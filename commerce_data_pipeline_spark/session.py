@@ -12,6 +12,9 @@ the right knobs for a large cluster:
 - Arrow on: any Pandas-UDF path moves data in columnar batches.
 - shuffle.partitions matched to local cores here; on a real cluster this is
   overridden (or left to AQE's coalescing with a high initial count).
+- The generated-code class cache holds the whole registry's compiled
+  classes (`CODEGEN_CACHE_ENTRIES`), so a repeated pass, microbatch or
+  registry round reuses them instead of recompiling every class.
 
 CLUSTER.md (repo root) maps every knob that changes on a real
 1000-executor deployment — shuffle sizing, broadcast budget, AQE skew
@@ -25,6 +28,17 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Entries in Spark's compiled-class cache (`spark.sql.codegen.cache.maxEntries`,
+# default 100). One round over the whole registry (201 queries, sf0.001)
+# compiles 2,400-2,700 whole-stage and expression classes, and one
+# olap_ingest benchmark pass about 200: at 100 entries a cyclic pass misses
+# on every class and recompiles it (about 10 ms each, then JIT again). Each
+# cached class costs about 35-45 KB of driver heap with its source key. The
+# cache is a static, JVM-wide conf: the first session that generates code in
+# a JVM fixes its size, and a later session in the same JVM cannot change
+# it. Executors size their own caches from the same conf.
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def default_parallelism() -> int:
@@ -68,6 +82,8 @@ def get_spark(
         # Parquet TIMESTAMP(NANOS) columns (e.g. pandas-written events.ts)
         # surface as LongType; the catalog converts them to µs timestamps.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Keep every compiled class of a repeated pass (see CODEGEN_CACHE_ENTRIES).
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # Quieter local runs.
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

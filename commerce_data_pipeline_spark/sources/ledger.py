@@ -93,13 +93,16 @@ class FingerprintLedger:
         return batch_unique.join(self.known(), on="fp", how="left_anti")
 
     def commit(self, admitted: DataFrame) -> None:
-        """Append the admitted fingerprints (prefix-partitioned)."""
+        """Append the admitted fingerprints (prefix-partitioned). The
+        prefix is a function of fp, so deduplicating on (prefix, fp)
+        keeps the same rows and reuses the prefix partitioning: one
+        exchange serves both the dedup and the file layout."""
         (
             admitted.select(
                 "fp", F.substring("fp", 1, self.prefix_chars).alias("fp_prefix")
             )
-            .dropDuplicates(["fp"])
             .repartition("fp_prefix")
+            .dropDuplicates(["fp_prefix", "fp"])
             .write.mode("append")
             .partitionBy("fp_prefix")
             .parquet(self.path)
@@ -133,16 +136,19 @@ class FingerprintLedger:
         def _write(tmp: str) -> None:
             (
                 self.known()
-                .dropDuplicates(["fp"])
                 .withColumn("fp_prefix", F.substring("fp", 1, prefix_chars))
+                .withColumn("_salt", F.pmod(F.crc32("fp"), F.lit(files_per_prefix)))
                 # (prefix, salt) keying: one prefix CAN split across
                 # files_per_prefix tasks; task count scales with the
-                # prefix space so the rewrite parallelizes at any size
+                # prefix space so the rewrite parallelizes at any size.
+                # Prefix and salt are functions of fp, so the dedup on
+                # (prefix, salt, fp) keeps the same rows and runs on this
+                # one exchange.
                 .repartition(
-                    (16**prefix_chars) * files_per_prefix,
-                    "fp_prefix",
-                    F.pmod(F.crc32("fp"), F.lit(files_per_prefix)),
+                    (16**prefix_chars) * files_per_prefix, "fp_prefix", "_salt"
                 )
+                .dropDuplicates(["fp_prefix", "_salt", "fp"])
+                .drop("_salt")
                 .write.partitionBy("fp_prefix")
                 .mode("overwrite")
                 .parquet(tmp)

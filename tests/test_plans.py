@@ -501,14 +501,15 @@ def test_ledger_filter_new_one_batch_scan_one_shuffle(spark, tmp_path):
     assert sorted(r["doc_id"] for r in lookup.collect()) == [1, 2, 3, 4]
 
 
-def test_sketch_accuracy_sketches_skip_the_per_user_aggregate(spark):
+@pytest.mark.parametrize("name", ["sketch_accuracy", "approx_stats"])
+def test_sketch_accuracy_sketches_skip_the_per_user_aggregate(spark, name):
     """The exact distinct count is its own aggregate. Planned inside one
     agg with the sketches, countDistinct keys a partial aggregation by
     user_id that carries every HLL++ and GK buffer; no aggregate keyed by
     user_id may hold a sketch, and no Expand may appear."""
     import re
 
-    df = REGISTRY["sketch_accuracy"].spark(spark, SF)
+    df = REGISTRY[name].spark(spark, SF)
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Expand" not in plan
@@ -540,3 +541,47 @@ def test_repetition_profile_grams_skip_per_gram_normalize(spark):
     bodies = _lambda_bodies(df._jdf.queryExecution().optimizedPlan().toString())
     assert bodies
     assert not [b for b in bodies if "regexp_replace" in b], bodies
+
+
+def _jseq(seq) -> list:
+    it = seq.iterator()
+    out = []
+    while it.hasNext():
+        out.append(it.next())
+    return out
+
+
+def _write_exchanges(spark, write) -> list[int]:
+    """Shuffle Exchange nodes in the final plan of each parquet write that
+    `write()` runs, read from the SQL status store once its listener has
+    seen every event."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    seen = {e.executionId() for e in _jseq(store.executionsList())}
+    write()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    counts = []
+    for e in _jseq(store.executionsList()):
+        if e.executionId() in seen:
+            continue
+        names = [n.name() for n in _jseq(store.planGraph(e.executionId()).allNodes())]
+        if any("InsertIntoHadoopFsRelationCommand" in n for n in names):
+            counts.append(names.count("Exchange"))
+    return counts
+
+
+def test_ledger_commit_and_compact_write_through_one_exchange(spark, tmp_path):
+    """The prefix (and compact's salt) are functions of fp, so each write
+    deduplicates on a key that contains its partitioning: one exchange
+    serves both the dedup and the file layout."""
+    from commerce_data_pipeline_spark.sources.ledger import FingerprintLedger
+
+    led = FingerprintLedger(spark, str(tmp_path / "ledger"))
+    batch = spark.createDataFrame(
+        [(i, f"document {i % 5}") for i in range(20)], "doc_id long, text string"
+    )
+    admitted = led.with_fingerprint(batch)
+    assert _write_exchanges(spark, lambda: led.commit(admitted)) == [1]
+    assert led.known().count() == 5
+    assert _write_exchanges(spark, lambda: led.commit(admitted)) == [1]
+    assert _write_exchanges(spark, lambda: led.compact(files_per_prefix=2)) == [1]
+    assert led.known().count() == 5

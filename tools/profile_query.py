@@ -4,6 +4,9 @@ For each named registry query: time to BUILD the DataFrame (py4j + analysis),
 then min-of-N full materializations (count(), matching bench.py), and the
 job/stage/task counts of one materialization via the status tracker — the
 fixed-overhead census that tells compute-bound from round-trip-bound.
+`compiles` is the number of generated-code classes the last (warm) rep
+compiled: with a codegen cache that holds the working set it is 0, so a
+non-zero count marks a query whose generated code differs between runs.
 `build_s` and `min_s` are both minima over the N reps: the first rep also
 pays one-time work such as building a persisted index. Each invocation is
 a fresh session, so profiling one query gives its isolated min-of-N,
@@ -14,7 +17,7 @@ free of the memory pressure and contention a suite run inherits.
 
 Prints one JSON line per query:
     {"query": ..., "build_s": ..., "min_s": ..., "runs": [...],
-     "n_jobs": ..., "n_stages": ..., "n_tasks": ...}
+     "n_jobs": ..., "n_stages": ..., "n_tasks": ..., "compiles": ...}
 """
 
 from __future__ import annotations
@@ -26,7 +29,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from commerce_data_pipeline_spark.measure import drop_persisted, warm_up
+from commerce_data_pipeline_spark.measure import codegen_compiles, drop_persisted, warm_up
 from commerce_data_pipeline_spark.queries import REGISTRY
 from commerce_data_pipeline_spark.session import get_spark
 
@@ -64,10 +67,11 @@ def main() -> int:
     for name in names:
         spec = REGISTRY[name]
         runs: list[float] = []
-        counters = {"n_jobs": 0, "n_stages": 0, "n_tasks": 0}
+        counters = {"n_jobs": 0, "n_stages": 0, "n_tasks": 0, "compiles": 0}
         builds: list[float] = []
         for r in range(reps):
             group = f"profile:{name}:{r}"
+            compiled_before, _ = codegen_compiles(spark)
             sc.setJobGroup(group, name)
             t0 = time.perf_counter()
             df = spec.spark(spark, sf_dir)
@@ -94,6 +98,7 @@ def main() -> int:
                     if sinfo:
                         n_tasks += sinfo.numTasks
                 counters["n_tasks"] = n_tasks
+                counters["compiles"] = codegen_compiles(spark)[0] - compiled_before
             drop_persisted(spark)
         print(
             json.dumps(
