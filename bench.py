@@ -3,75 +3,89 @@ scale factor and prints ONE JSON line for the driver (BENCH_r{N}.json).
 
     SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 python bench.py
 
-Each query is fully materialized via count() on the result (no driver-side
-collect of payload rows). Wall-clock per query; `value` is the total.
+Each query is built and fully materialized by a noop write
+(`measure.time_reps`; no driver-side collect of payload rows), so every
+column of the result is computed. Wall-clock per query; `value` is the
+total. The artifact records what it measured: `sf`, `cpus`
+(defaultParallelism), `materialize` and the git `sha`.
 """
 
 from __future__ import annotations
 
+import functools
+import glob
 import json
 import os
+import re
+import subprocess
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from commerce_data_pipeline_spark.measure import drop_persisted, warm_up
+from commerce_data_pipeline_spark.measure import WRITE_FORMAT, probe, time_reps, warm_up
 from commerce_data_pipeline_spark.queries import REGISTRY
 from commerce_data_pipeline_spark.session import get_spark
 
 
-def load_defense_history(repo_dir: str, sf_norm: str, k: int = 4) -> dict[str, float]:
+def load_defense_history(
+    repo_dir: str, sf_norm: str, cpus: int, materialize: str, k: int = 4
+) -> dict[str, float]:
     """Per-query MIN over the last-committed BENCH_FULL.json AND the last
-    `k` driver round artifacts (BENCH_r*.json) at the same scale factor.
+    `k` round artifacts (BENCH_r*.json) measured like this run:
+    same sf, same `cpus` and same `materialize`. An artifact without
+    `materialize` predates the noop write and counts as "count" (a
+    count() time prunes columns, so it can sit far below the noop time of
+    the same code); one without `cpus` never defends, because its core
+    count is unknown.
 
-    r12 VERDICT #2: the defense used to compare against BENCH_FULL.json
-    alone — the last run. When the driver's refresh itself ran contended,
-    the inflated rows (bigram_lm 3.56 s vs 1.42 s same-code history)
-    became the history the next round's 2× check compared against, so
-    outliers self-ratified. The round artifacts are slowest-first
-    truncations of their runs, which is exactly the population the 2×
-    defense cares about; taking the min across BENCH_FULL + the last k
-    rounds means one contended refresh can never raise the bar — a row
+    The min over several runs means one contended refresh can never raise
+    the bar (a contended BENCH_FULL once carried bigram_lm at 3.56 s
+    against a 1.42 s same-code run, and became its own baseline): a row
     only enters history at the best time any recent run achieved.
     """
-    sources: list[dict] = []
-    try:
-        with open(os.path.join(repo_dir, "BENCH_FULL.json")) as f:
-            full = json.load(f)
-        if str(full.get("sf")) == sf_norm:
-            sources.append(full.get("queries") or {})
-    except Exception:
-        pass
-    import glob
-    import re
-
     rounds: list[tuple[int, str]] = []
     for path in glob.glob(os.path.join(repo_dir, "BENCH_r*.json")):
         m = re.search(r"BENCH_r(\d+)\.json$", path)
         if m:
             rounds.append((int(m.group(1)), path))
-    for _, path in sorted(rounds)[-k:]:
+    paths = [os.path.join(repo_dir, "BENCH_FULL.json")] + [p for _, p in sorted(rounds)[-k:]]
+    hist: dict[str, float] = {}
+    for path in paths:
         try:
             with open(path) as f:
                 art = json.load(f)
-            queries = (art.get("parsed") or {}).get("queries") or art.get("queries") or {}
-            art_sf = art.get("sf", (art.get("parsed") or {}).get("sf"))
-            if str(art_sf) == sf_norm:
-                sources.append(queries)
-        except Exception:
-            pass
-    hist: dict[str, float] = {}
-    for queries in sources:
-        for name, v in queries.items():
+        except (OSError, ValueError):
+            continue
+        # round artifacts wrap the stdout line in `parsed`; their own
+        # top-level keys (sf, cpus) take precedence
+        meta = {**(art.get("parsed") or {}), **art}
+        if (
+            str(meta.get("sf")) != sf_norm
+            or meta.get("cpus") != cpus
+            or meta.get("materialize", "count") != materialize
+        ):
+            continue
+        for name, v in (meta.get("queries") or {}).items():
             if isinstance(v, (int, float)) and v > 0:
                 hist[name] = min(hist.get(name, float("inf")), float(v))
     return hist
 
 
+def _git_sha(repo_dir: str) -> str | None:
+    try:
+        out = subprocess.run(
+            ["git", "rev-parse", "--short", "HEAD"],
+            cwd=repo_dir, capture_output=True, text=True, check=True, timeout=10,
+        )
+    except (OSError, subprocess.SubprocessError):
+        return None
+    return out.stdout.strip() or None
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
     spark = get_spark("bench")
     # Bench-session-only log hygiene (VERDICT r15 #7: the recorded tail
     # must start at the metric line). WindowExec's single-partition WARN
@@ -92,29 +106,12 @@ def main() -> None:
         pass  # connect-mode: noisier tail but harmless
 
     warm_up(spark, sf_dir)
-    from pyspark.sql import functions as F
 
-    # Fixed-cost calibration probe (r9 VERDICT directive #2): one trivial
-    # constant-work query — sf-independent, codegen + one 32-key shuffle —
-    # timed immediately after warm-up and again after the whole suite. Its
-    # two times ship in the JSON so a contended-harness run (BENCH_r09:
-    # driver 150.3 s vs builder 130.5 s at the same HEAD) is diagnosable
-    # from the artifact alone: inflated probe ⇒ environment, flat probe
-    # with inflated queries ⇒ bisect for a real regression.
-    def _probe() -> float:
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            (
-                spark.range(2_000_000)
-                .groupBy((F.col("id") % 32).alias("k"))
-                .agg(F.sum("id").alias("s"))
-                .count()
-            )
-            best = min(best, time.perf_counter() - t0)
-        return round(best, 4)
-
-    probe_first = _probe()
+    # Calibration probe, timed right after warm-up and again after the
+    # whole suite: its two times ship in the JSON, so a contended run is
+    # diagnosable from the artifact alone (inflated probe: environment;
+    # flat probe with inflated queries: bisect for a real regression).
+    probe_first = probe(spark)
 
     # Min-of-N timing (default 2): this VM shows 3-4× run-to-run swings
     # (cold JIT, noisy neighbors — STRESS.md documents dedup_clusters at
@@ -127,67 +124,49 @@ def main() -> None:
     # the run as a whole, but min-of-2 let a single contended row ship a
     # 4× outlier (semantic_only_dups 9.5 s vs a 2.2 s history while the
     # same code measured 1.7 s in an isolated run). If a query's min
-    # exceeds 2× its committed BENCH_FULL history (and the swing is
-    # > 0.5 s absolute — sub-second rows are pure timer noise), grant it
-    # up to 2 extra passes, stopping early once it lands within 2×. The
-    # extra work is bounded: at most _DEFENSE_MAX_EXTRA passes across the
-    # whole suite, slowest offenders defended first by construction
-    # (defense happens inline, right after the offending measurement,
-    # while the history file still reflects the prior round).
+    # exceeds 2× its history (and the swing is > 0.5 s absolute —
+    # sub-second rows are pure timer noise), grant it up to 2 extra
+    # passes, stopping early once it lands within 2×. The extra work is
+    # bounded: at most _DEFENSE_MAX_EXTRA passes across the whole suite,
+    # slowest offenders defended first by construction (defense happens
+    # inline, right after the offending measurement, while the history
+    # file still reflects the prior round).
     _DEFENSE_MAX_EXTRA = 20
     repo_dir = os.path.dirname(os.path.abspath(__file__))
-    sf_norm = str(float(sf)) if sf.replace(".", "").isdigit() else sf
-    hist = load_defense_history(repo_dir, sf_norm)
+    cpus = spark.sparkContext.defaultParallelism
+    hist = load_defense_history(repo_dir, str(sf_val), cpus, WRITE_FORMAT)
     defense_used = 0
     defended: dict[str, list[float]] = {}
 
     timings: dict[str, float] = {}
     for name, spec in REGISTRY.items():
-        best = -1.0
-        failed = False
-        for _ in range(runs):
-            t0 = time.perf_counter()
+        build = functools.partial(spec.spark, spark, sf_dir)
+        try:
+            best = min(r.total_s for r in time_reps(spark, build, runs, name))
+        except Exception as e:  # record the failure; never break the bench line
+            print(f"bench error in {name}: {e}", file=sys.stderr)
+            timings[name] = -1.0
+            continue
+        first_min = best
+        extra_here = 0
+        while (
+            name in hist
+            and best > 2.0 * hist[name]
+            and best - hist[name] > 0.5
+            and defense_used < _DEFENSE_MAX_EXTRA
+            and extra_here < 2
+        ):
+            defense_used += 1
+            extra_here += 1
             try:
-                df = spec.spark(spark, sf_dir)
-                df.count()
-                dt = time.perf_counter() - t0
-                best = dt if best < 0 else min(best, dt)
-            except Exception as e:  # record the failure; never break the bench line
-                best = -1.0
-                failed = True
-                print(f"bench error in {name}: {e}", file=sys.stderr)
+                best = min(best, time_reps(spark, build, 1, name)[0].total_s)
+            except Exception:
                 break
-            finally:
-                # drop persisted blocks (e.g. the LSH bucket index) so queries
-                # are timed independently, not under accumulated memory pressure
-                drop_persisted(spark)
-        if not failed and name in hist:
-            first_min = best
-            extra_here = 0
-            while (
-                best > 2.0 * hist[name]
-                and best - hist[name] > 0.5
-                and defense_used < _DEFENSE_MAX_EXTRA
-                and extra_here < 2
-            ):
-                defense_used += 1
-                extra_here += 1
-                t0 = time.perf_counter()
-                try:
-                    spec.spark(spark, sf_dir).count()
-                    best = min(best, time.perf_counter() - t0)
-                except Exception:
-                    break
-                finally:
-                    drop_persisted(spark)
-                defended.setdefault(name, [round(first_min, 3)]).append(
-                    round(best, 3)
-                )
+            defended.setdefault(name, [round(first_min, 3)]).append(round(best, 3))
         timings[name] = round(best, 3)
 
-    probe_last = _probe()
+    probe_last = probe(spark)
     total = round(sum(t for t in timings.values() if t >= 0), 3)
-    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
 
     # Full per-query record → BENCH_FULL.json beside this script. The
     # driver stores only the last 2000 chars of stdout, so a 100-query
@@ -201,6 +180,11 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": sf_val,
+        # what the numbers measured: the history defense only compares a
+        # row against artifacts with the same sf, cpus and materialize
+        "cpus": cpus,
+        "materialize": WRITE_FORMAT,
+        "sha": _git_sha(repo_dir),
         # each per-query number is the MIN of `runs` full materializations
         # (r6 VERDICT #6: single samples absorb ±7%+ VM contention and
         # round-over-round deltas become noise); caches/persisted RDDs are
@@ -216,30 +200,25 @@ def main() -> None:
         "probe_last_s": probe_last,
         "probe_ratio": round(probe_last / probe_first, 3) if probe_first > 0 else None,
         # per-query self-defense record: queries whose min-of-N exceeded
-        # 2× their committed BENCH_FULL history and were granted extra
-        # passes ([first_min, min_after_pass_1, ...]); a row still >2×
-        # after defense is a real regression, not a contended sample.
+        # 2× their history and were granted extra passes ([first_min,
+        # min_after_pass_1, ...]); a row still >2× after defense is a real
+        # regression, not a contended sample.
         "defended": defended,
         "defense_extra_passes": defense_used,
     }
-    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                           "BENCH_FULL.json"), "w") as f:
+    with open(os.path.join(repo_dir, "BENCH_FULL.json"), "w") as f:
         json.dump(full, f, indent=1)
 
     # stdout line: failures first (always visible), then slowest-first
     # until the 1900-char budget is spent; the rest are in BENCH_FULL.json.
     budget = 1900
     ordered = sorted(timings, key=lambda n: (timings[n] >= 0, -timings[n]))
-    line_q: dict[str, float] = {}
+    obj = dict(full, queries={}, n_queries=len(timings), full="BENCH_FULL.json")
     for name in ordered:
-        line_q[name] = timings[name]
-        obj = dict(full, queries=line_q,
-                   n_queries=len(timings), full="BENCH_FULL.json")
+        obj["queries"][name] = timings[name]
         if len(json.dumps(obj, separators=(",", ":"))) > budget:
-            del line_q[name]
+            del obj["queries"][name]
             break
-    obj = dict(full, queries=line_q,
-               n_queries=len(timings), full="BENCH_FULL.json")
     print(json.dumps(obj, separators=(",", ":")))
 
 

@@ -85,6 +85,11 @@ def build_ivf_index(
       literal codebook expression at scan time. Coarse routing stays
       exact (centroids are never quantized); only list scoring is
       approximate (recall pinned in tests)."""
+    spark = corpus.sparkSession
+    fs = HadoopFS(spark, path)
+    # an in-place rebuild withdraws the uniform-gen witness first and
+    # re-stamps it only once every file under inverted/ is rewritten
+    fs.delete(join_path(path, _GEN_UNIFORM_MARKER))
     u = with_unit_vector(corpus, vec_col, "unit")
     total = corpus_count if corpus_count is not None else corpus.count()
     if n_centroids is None:  # √N rule — see similarity.auto_n_centroids
@@ -109,28 +114,30 @@ def build_ivf_index(
             sc.alias("scale"),
             F.transform(v, lambda x: F.floor(x / sc + F.lit(0.5)).cast("int")).alias("qvec"),
         )
+    # static overwrite: the session default (dynamic) would replace only
+    # the centroid partitions this build writes and keep a previous
+    # build's other lists — stale rows, without gen on a pre-gen index
     (
         inverted.withColumn("gen", F.lit(0).cast("int"))
         .repartition("centroid_id")
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "static")
         .partitionBy("centroid_id")
         .parquet(join_path(path, "inverted"))
     )
     centroids.write.mode("overwrite").parquet(join_path(path, "centroids"))
-    # gen was stamped uniformly on every inverted row above; witness it so
-    # readers skip the per-file footer merge (see _read_inverted)
-    HadoopFS(corpus.sparkSession, path).write_bytes(
-        join_path(path, _GEN_UNIFORM_MARKER), b""
-    )
-    _set_gen(corpus.sparkSession, path, 0)
+    _set_gen(spark, path, 0)
     # persist the ACTUAL build-time routing width, not the requested
     # n_centroids: on sparse id spaces ivf_centroids yields fewer rows
     # than requested (require_centroids tolerates gaps), and a base
     # recorded too high would tell recommended_n_probe to SHRINK the
     # serving n_probe after a split (r14 review). The centroid table is
     # ≤ √N rows — the count is a build-time-only action.
-    actual = corpus.sparkSession.read.parquet(join_path(path, "centroids")).count()
-    _set_centroid_meta(corpus.sparkSession, path, int(actual))
+    actual = spark.read.parquet(join_path(path, "centroids")).count()
+    _set_centroid_meta(spark, path, int(actual))
+    # gen was stamped uniformly on every inverted row above; witness it so
+    # readers skip the per-file footer merge (see _read_inverted)
+    fs.write_bytes(join_path(path, _GEN_UNIFORM_MARKER), b"")
 
 
 def _sidecar_readable(fs: HadoopFS, leaf: str) -> bool:

@@ -68,13 +68,6 @@ def top_k(df: DataFrame, k: int, *order_cols: Column) -> DataFrame:
     return df.orderBy(*order_cols).limit(k)
 
 
-def distinct_values(df: DataFrame, *cols: str) -> DataFrame:
-    """P4/P5 — partition/date discovery: distinct over the listed columns.
-    Map-side partial aggregation keeps the shuffle tiny (one row per
-    partition per distinct value)."""
-    return df.select(*cols).distinct()
-
-
 def missing_dates(source_dates: DataFrame, sink_dates: DataFrame, on: str) -> DataFrame:
     """P6 — gap detection as a left-anti join: dates present in source,
     absent from sink (reference: Python list comprehension, pipeline.py:252).

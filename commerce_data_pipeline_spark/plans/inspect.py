@@ -23,10 +23,6 @@ def formatted_plan(df: DataFrame) -> str:
     )
 
 
-def _executed_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def uses_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in formatted_plan(df) or "BroadcastNestedLoopJoin" in formatted_plan(df)
 

@@ -89,33 +89,6 @@ def session_window_stats(
     )
 
 
-def streaming_conversion_rates(
-    events: DataFrame,
-    convert_type: str = "purchase",
-    watermark: str = "1 day",
-) -> DataFrame:
-    """G3, incremental: per-day conversion counts maintained as a running
-    aggregate. approx_count_distinct keeps per-window state fixed-size
-    (exact distinct over an unbounded stream would grow state without
-    bound — the sketch is the 100 TB-safe choice)."""
-    src = events.withWatermark("ts", watermark) if events.isStreaming else events
-    is_conv = F.col("event_type") == convert_type
-    return (
-        src.groupBy(F.window("ts", "1 day").alias("day_window"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.approx_count_distinct("user_id").alias("approx_users"),
-            F.approx_count_distinct(F.when(is_conv, F.col("user_id"))).alias("approx_converters"),
-        )
-        .select(
-            F.date_format(F.col("day_window.start"), "yyyy-MM-dd").alias("day"),
-            "n_events",
-            "approx_users",
-            "approx_converters",
-        )
-    )
-
-
 def dedup_stream(
     events: DataFrame,
     key_cols: tuple[str, ...] = ("event_id",),

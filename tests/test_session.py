@@ -3,7 +3,7 @@ round of the olap_ingest registry ops plus a ledger ingest (more classes
 than Spark's default cache of 100 holds) compiles no class again."""
 
 from commerce_data_pipeline_spark.catalog import load_table
-from commerce_data_pipeline_spark.measure import codegen_compiles
+from commerce_data_pipeline_spark.measure import codegen_compiles, materialize
 from commerce_data_pipeline_spark.queries import REGISTRY
 from commerce_data_pipeline_spark.sources.ledger import FingerprintLedger
 
@@ -18,7 +18,7 @@ def test_warm_round_compiles_nothing(spark, sf_dir, tmp_path):
 
     def one_round(i: int) -> None:
         for name in OLAP_OPS:
-            REGISTRY[name].spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            materialize(REGISTRY[name].spark(spark, sf_dir))
         FingerprintLedger(spark, str(tmp_path / f"ledger{i}")).ingest(docs)
 
     # twice: market_share still compiles a few classes on its second run

@@ -2,7 +2,9 @@
 expression path equivalence, near-dup thresholds, ANN recall sanity."""
 
 import math
+import os
 import random
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -110,6 +112,40 @@ def test_persisted_ivf_index_matches_inline(spark, tmp_path):
     # the inverted file is laid out one directory per centroid list
     names = {n for n in __import__("os").listdir(tmp_path / "ivf" / "inverted")}
     assert any(n.startswith("centroid_id=") for n in names)
+
+
+def test_ivf_rebuild_over_pre_gen_index_leaves_no_gen_less_file(spark, tmp_path):
+    """An in-place rebuild with fewer centroids over a pre-generation index
+    (no `gen` column, no _GEN_UNIFORM marker) must replace every centroid
+    list: a dynamic partition overwrite keeps the old lists the new build
+    does not write, so gen-less files survive under a marker that says
+    none exist, and their stale rows are read without mergeSchema."""
+    import pyarrow.parquet as pq
+
+    from commerce_data_pipeline_spark.operators import index as I
+
+    emb = _vecs(spark, n=60)
+    path = f"file://{tmp_path}/ivf"
+    I.build_ivf_index(emb, path, n_centroids=6)
+    # rewrite it as a pre-gen index: same lists, no gen column, no marker
+    spark.read.parquet(f"{path}/inverted").drop("gen").write.partitionBy(
+        "centroid_id"
+    ).parquet(f"file://{tmp_path}/pre_gen")
+    shutil.rmtree(tmp_path / "ivf" / "inverted")
+    shutil.move(tmp_path / "pre_gen", tmp_path / "ivf" / "inverted")
+    os.remove(tmp_path / "ivf" / I._GEN_UNIFORM_MARKER)
+
+    I.build_ivf_index(emb, path, n_centroids=2)
+    inverted = tmp_path / "ivf" / "inverted"
+    gen_less = [
+        str(f.relative_to(inverted)) for f in inverted.rglob("*.parquet")
+        if "gen" not in pq.read_schema(f).names
+    ]
+    assert gen_less == []
+    assert (tmp_path / "ivf" / I._GEN_UNIFORM_MARKER).exists()
+    listed = {d.name for d in inverted.iterdir() if d.name.startswith("centroid_id=")}
+    routed = {f"centroid_id={r['centroid_id']}" for r in spark.read.parquet(f"{path}/centroids").collect()}
+    assert listed == routed
 
 
 def test_ivf_index_incremental_append(spark, tmp_path):

@@ -5,9 +5,10 @@ persisted frame feeds concurrent subtrees of one job (partitions can be
 computed more than once before blocks land). This tool adjudicates each
 flagged site: it wraps the package-wide checkpoint shim with a version
 that forces ``eager=True`` ONLY when the call originates from the target
-file:lineno sites, then times each query alternating lazy (A) / eager (B)
-inside ONE SparkSession — the only comparison this box's +-40% session
-noise permits.
+file:lineno sites, then times each query (build + noop write through
+`measure.time_reps`) alternating lazy (A) / eager (B) inside ONE
+SparkSession — the only comparison this box's +-40% session noise
+permits.
 
     python tools/ab_lazy_eager.py \
         --file commerce_data_pipeline_spark/operators/similarity.py \
@@ -22,15 +23,16 @@ named file. Prints one JSON line per query:
 
 from __future__ import annotations
 
+import argparse
+import functools
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from commerce_data_pipeline_spark import checkpoint as _ckpt_mod
-from commerce_data_pipeline_spark.measure import drop_persisted, warm_up
+from commerce_data_pipeline_spark.measure import REPS, materialize, time_reps, warm_up
 from commerce_data_pipeline_spark.queries import REGISTRY
 from commerce_data_pipeline_spark.session import get_spark
 
@@ -45,35 +47,29 @@ _HITS: set[tuple[str, int]] = set()
 _SEEN: set[tuple[str, int, bool]] = set()
 
 
-def _caller_site() -> tuple[str, int]:
+def _first_frame(match) -> tuple[str, int] | None:
+    """(file, line) of the nearest of the checkpoint caller's 10 innermost
+    frames whose file name satisfies `match`."""
     f = sys._getframe(2)
-    depth = 0
-    while f is not None and depth < 10:
-        fn = f.f_code.co_filename
-        if "commerce_data_pipeline_spark" in fn:
-            return fn, f.f_lineno
+    for _ in range(10):
+        if f is None:
+            return None
+        if match(f.f_code.co_filename):
+            return f.f_code.co_filename, f.f_lineno
         f = f.f_back
-        depth += 1
-    return "?", 0
+    return None
 
 
 def _patched(df, eager: bool = True):
-    _SEEN.add((*_caller_site(), eager))
+    site = _first_frame(lambda fn: "commerce_data_pipeline_spark" in fn)
+    _SEEN.add((*(site or ("?", 0)), eager))
     if _ACTIVE["on"] and not eager:
-        f = sys._getframe(1)
-        depth = 0
-        while f is not None and depth < 10:
-            fn = f.f_code.co_filename
-            if fn in _FORCE:
-                lines = _FORCE[fn]
-                if not lines or f.f_lineno in lines:
-                    _HITS.add((fn, f.f_lineno))
-                    if _ACTIVE.get("mode") == "skip":
-                        return df  # no checkpoint at all (measurement arm)
-                    return _ORIG(df, eager=True)
-                break
-            f = f.f_back
-            depth += 1
+        hit = _first_frame(lambda fn: fn in _FORCE)
+        if hit and (not _FORCE[hit[0]] or hit[1] in _FORCE[hit[0]]):
+            _HITS.add(hit)
+            if _ACTIVE.get("mode") == "skip":
+                return df  # no checkpoint at all (measurement arm)
+            return _ORIG(df, eager=True)
     return _ORIG(df, eager=eager)
 
 
@@ -90,35 +86,23 @@ def _install() -> None:
 
 
 def main() -> int:
-    argv = list(sys.argv[1:])
     sf_dir = "/root/testdata/sf0.1"
-    rounds, reps = 3, 3
-    target_file = None
-    lines: set[int] = set()
-    queries: list[str] = []
-    i = 0
-    while i < len(argv):
-        a = argv[i]
-        if a == "--sf-dir":
-            sf_dir = argv[i + 1]; i += 2
-        elif a == "--rounds":
-            rounds = int(argv[i + 1]); i += 2
-        elif a == "--reps":
-            reps = int(argv[i + 1]); i += 2
-        elif a == "--file":
-            target_file = os.path.abspath(argv[i + 1]); i += 2
-        elif a == "--lines":
-            lines = {int(x) for x in argv[i + 1].split(",") if x}; i += 2
-        elif a == "--queries":
-            queries = [q for q in argv[i + 1].split(",") if q]; i += 2
-        elif a == "--trace":
-            target_file = "__trace__"; i += 1
-        elif a == "--skip":
-            _ACTIVE["mode"] = "skip"; i += 1
-        else:
-            print(f"unknown arg {a}", file=sys.stderr)
-            return 2
-    if target_file == "__trace__":
+    ap = argparse.ArgumentParser(add_help=False)
+    ap.add_argument("--sf-dir", default=sf_dir)
+    ap.add_argument("--rounds", type=int, default=3)
+    ap.add_argument("--reps", type=int, default=REPS)
+    ap.add_argument("--file")
+    ap.add_argument("--lines", default="")
+    ap.add_argument("--queries", default="")
+    ap.add_argument("--trace", action="store_true")
+    ap.add_argument("--skip", action="store_true")
+    args = ap.parse_args()
+    sf_dir, rounds, reps = args.sf_dir, args.rounds, args.reps
+    lines = {int(x) for x in args.lines.split(",") if x}
+    queries = [q for q in args.queries.split(",") if q]
+    if args.skip:
+        _ACTIVE["mode"] = "skip"
+    if args.trace:
         if not queries:
             print("need --queries", file=sys.stderr)
             return 2
@@ -126,38 +110,33 @@ def main() -> int:
         spark = get_spark("ab-trace")
         for name in queries:
             _SEEN.clear()
-            REGISTRY[name].spark(spark, sf_dir).count()
+            materialize(REGISTRY[name].spark(spark, sf_dir))
             sites = sorted(
                 f"{os.path.relpath(f, os.getcwd())}:{l}:{'eager' if e else 'lazy'}"
                 for f, l, e in _SEEN
             )
             print(json.dumps({"query": name, "checkpoint_sites": sites}), flush=True)
         return 0
-    if not target_file or not queries:
+    if not args.file or not queries:
         print("need --file and --queries", file=sys.stderr)
         return 2
     unknown = [q for q in queries if q not in REGISTRY]
     if unknown:
         print(f"unknown queries: {unknown}", file=sys.stderr)
         return 2
-    _FORCE[target_file] = lines
+    _FORCE[os.path.abspath(args.file)] = lines
     _install()
 
     spark = get_spark("ab-lazy-eager")
     warm_up(spark, sf_dir)
 
     for name in queries:
-        spec = REGISTRY[name]
+        build = functools.partial(REGISTRY[name].spark, spark, sf_dir)
         res = {"lazy": [], "eager": []}
         for _r in range(rounds):
             for variant in ("lazy", "eager"):
                 _ACTIVE["on"] = variant == "eager"
-                best = float("inf")
-                for _ in range(reps):
-                    t0 = time.perf_counter()
-                    spec.spark(spark, sf_dir).count()
-                    best = min(best, time.perf_counter() - t0)
-                    drop_persisted(spark)
+                best = min(r.total_s for r in time_reps(spark, build, reps, name))
                 res[variant].append(round(best, 3))
         _ACTIVE["on"] = False
         lb, eb = min(res["lazy"]), min(res["eager"])

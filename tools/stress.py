@@ -14,6 +14,10 @@ whose time grows ≈K× is scaling linearly in input size — the property that
 predicts survival at 100 TB. Ratios well above K flag a scaling cliff
 (quadratic pair growth, driver bottleneck, broadcast overflow).
 
+Each cell is the min-of-`measure.REPS` of `measure.time_reps`: build the
+query and materialize every column of its result with a noop write, with
+persisted blocks dropped between runs, outside the timed span.
+
 This harness rebinds the registry's table loader — queries themselves are
 unmodified, exactly the code under test.
 """
@@ -23,7 +27,6 @@ from __future__ import annotations
 import functools
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -31,7 +34,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from commerce_data_pipeline_spark import queries as Q
 from commerce_data_pipeline_spark.catalog import load_table
-from commerce_data_pipeline_spark.measure import drop_persisted, warm_up
+from commerce_data_pipeline_spark.measure import REPS, time_reps, warm_up
 from commerce_data_pipeline_spark.session import get_spark
 
 # keys shifted per copy so the scaled table has K× distinct entities
@@ -221,18 +224,8 @@ def scaled_loader(k: int):
     return load
 
 
-REPS = 3  # min-of-N warm runs: this VM swings 3-4× run-to-run (cold JIT,
-# noisy neighbors — r4's product_profit 17.3× was a single-run artifact);
-# the min is the least-contended observation and the right scaling signal
-
-
-def _timed_min(fn, reps: int = REPS) -> float:
-    best = float("inf")
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        fn()
-        best = min(best, time.perf_counter() - t0)
-    return best
+def _min_s(spark, build, label: str) -> float:
+    return min(r.total_s for r in time_reps(spark, build, REPS, label))
 
 
 def run_at_scale(spark, sf_dir: str, k: int, names: list[str]) -> dict[str, float]:
@@ -246,15 +239,10 @@ def run_at_scale(spark, sf_dir: str, k: int, names: list[str]) -> dict[str, floa
     original_tag = Q.get_cache_tag()
     Q.set_cache_tag(f"x{k}" if k != 1 else "")
     try:
-        out: dict[str, float] = {}
-        for name in names:
-
-            def run(name=name):
-                Q.REGISTRY[name].spark(spark, sf_dir).count()
-                drop_persisted(spark)
-
-            out[name] = _timed_min(run)
-        return out
+        return {
+            name: _min_s(spark, functools.partial(Q.REGISTRY[name].spark, spark, sf_dir), name)
+            for name in names
+        }
     finally:
         Q.rebind_load_table(Q.load_table)
         Q.set_cache_tag(original_tag)
@@ -281,7 +269,7 @@ def ledger_match_time(spark, sf_dir: str, k: int) -> float:
     try:
         led = BandLedger(spark, os.path.join(tmp, "bands"))
         led.ingest(history)
-        return _timed_min(lambda: led.match_history(batch).count())
+        return _min_s(spark, lambda: led.match_history(batch), "ledger_match_history")
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -308,8 +296,9 @@ def main() -> None:
         "document text / embedding directions are decorrelated per copy so the",
         f"{k}× corpus keeps the base dup-rate — without that, pair counts grow",
         "K² for data reasons and hide/invent operator cliffs).",
-        f"Every cell is the MIN of {REPS} warm runs (this VM's single-run",
-        "noise is 3-4×, enough to manufacture fake cliffs).",
+        f"Every cell is the MIN of {REPS} warm runs, each building the query and",
+        "materializing every column of its result with a noop write (this VM's",
+        "single-run noise is 3-4×, enough to manufacture fake cliffs).",
         f"`ratio` ≈ {k} means linear scaling in input size; sub-{k} means fixed",
         "costs still dominate at this size; far above K would flag a cliff.",
         "",
